@@ -53,13 +53,15 @@ ALL_MODULES = (
 # ROUND-13 ROTATION — built by the standing policy below (verbatim from
 # round 11; second majority-sentinel window):
 #
-# AUTOMATIC picks (37) — every ORACLED name whose body changed this
+# AUTOMATIC picks (38) — every ORACLED name whose body changed this
 # optimization round (policy 1a/1b; the rows-only l3_ann_lsh/l3_ann_ivf
 # carry ADVICE-r12 and r13 rewrites but cannot enter an all-oracled
 # window — their oracled image l3_ann_recall_contract stands in):
 #   - ANN/kernel tiling + min-agg dedup + ADVICE r12 #1/#2:
 #     q10_cosine_topk, l3_knn_block_matmul, l2_embedding_neardup,
 #     l3_ann_recall_contract, l2_semdedup
+#   - symmetric halving (r13) + the shared top-k window helper, ADVICE
+#     r13 (policy 1b): l3_cosine_topk_hof
 #   - composed shingle fold / prefix filter / long-format winnow packs
 #     / spread (VERDICT r12 §Next #2/#4): l2_minhash_lsh,
 #     l2_incremental_minhash_dedup, l2_minhash_recall, l2_bbit_minhash,
@@ -77,7 +79,7 @@ ALL_MODULES = (
 #     st26_sliding_watermark_extrema, st40_segment_session_dwell,
 #     x1_asof_sql, x1b_asof_left_sql, x1c_asof_multikey_sql
 #
-# CHURN SENTINELS (13), staleness-ranked per the policy (grade round
+# CHURN SENTINELS (12), staleness-ranked per the policy (grade round
 # from the checked-in CORRECTNESS ledgers vs last file churn = r12/r13):
 #   - rewritten r12, never regraded since: j9_fuzzy_name_join (r3),
 #     j13_trajectory_similarity (r4), l6_covariance_matrix (r3), and
@@ -86,8 +88,9 @@ ALL_MODULES = (
 #   - oldest grades (r1) in files churned this round:
 #     l2_fingerprint_dupsets, l4_word_freq, l6_centroid_distances,
 #     q14_promo_share, q15_top_supplier, q18_large_volume_customers,
-#     q19_disjunctive_revenue, f4_math; plus l4_trigram_novelty
-#     (rewritten r12, grade r9) — 13 sentinels total
+#     q19_disjunctive_revenue, f4_math — 12 sentinels total
+#     (l4_trigram_novelty, rewritten r12 and graded r9, was the
+#     lowest-ranked and gave its slot to l3_cosine_topk_hof)
 #
 # ROUND-13+ WINDOW POLICY (standing, decided round 11 per VERDICT r10
 # §Next 4 — kept verbatim so the next rotation follows it):
@@ -111,6 +114,7 @@ DRIVER_WINDOW = (
     "l2_embedding_neardup",
     "l3_ann_recall_contract",
     "l2_semdedup",
+    "l3_cosine_topk_hof",
     "l2_minhash_lsh",
     "l2_incremental_minhash_dedup",
     "l2_minhash_recall",
@@ -157,7 +161,6 @@ DRIVER_WINDOW = (
     "q18_large_volume_customers",
     "q19_disjunctive_revenue",
     "f4_math",
-    "l4_trigram_novelty",
 )
 
 assert len(DRIVER_WINDOW) == 50, len(DRIVER_WINDOW)

@@ -678,8 +678,6 @@ def l2_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-Catalyst pairwise formulation survives as
     l3_cosine_topk_hof's documented reference shape.
     """
-    import numpy as np
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     ids_idx = _guarded_index_arrays(e)
     bc = spark.sparkContext.broadcast(ids_idx)
@@ -688,8 +686,7 @@ def l2_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         all_ids, idx = bc.value
         for pdf in batches:
             q_ids = pdf["vec_id"].to_numpy()
-            Q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Q /= np.linalg.norm(Q, axis=1, keepdims=True)
+            Q = _stack_rows(pdf["embedding"], unit=True)
             # upper triangle only (vec_a < vec_b), threshold inline;
             # index-column tiled (r13) so neither the score block nor
             # the emission ever materializes whole per batch
@@ -1046,39 +1043,11 @@ def _vectorized_topk(q_ids, all_ids, S, k):
     return q_ids[rows], all_ids[cols], S[rows, cols]
 
 
-# ---------------------------------------------------------------------------
-# In-kernel score-matrix tiling (optimization r13, VERDICT r12 §Next #1
-# / §What's-wrong #1): no Arrow kernel may materialize an unbounded
-# dense score block. The r12 kernels computed ONE B×B (or batch×index)
-# float64 matrix per group — fine at sf0.1 where B is a few hundred,
-# a guaranteed worker OOM at 100 TB for a hot LSH bucket, a fat IVF
-# cell, or a capped-but-large broadcast index (4M rows × 10k-row batch
-# = 320 GB of scores). Every matmul now runs in tiles of at most
-# _KERNEL_TILE_CELLS score cells (128 MiB of float64); whenever a group
-# fits one tile — every group of every fixture SF does — the tile slice
-# is a full-array numpy view, so the gemm call and therefore every
-# rounded double is BIT-IDENTICAL to the untiled r12 kernel (goldens
-# pin this). Multi-tile groups additionally cap what one group may
-# RETURN (_KERNEL_PAIR_EMIT_CAP): the all-pairs kernels' output is
-# inherently O(B²) rows held in the worker until Arrow ships them, so a
-# group that would emit more than the cap fails loudly with routing
-# advice instead of silently OOM-killing the executor (the
-# _guarded_index_arrays pattern).
-# ---------------------------------------------------------------------------
-
 _KERNEL_TILE_CELLS = 4096 * 4096  # ≤ 128 MiB of float64 per score tile
 
 _KERNEL_PAIR_EMIT_CAP = 100_000_000  # pair rows one group may return (~2.4 GB)
 
-
-def _tile_steps(n_rows: int, n_cols: int):
-    """Row ranges [r0, r1) tiling an (n_rows × n_cols) score matrix so
-    each tile holds ≤ _KERNEL_TILE_CELLS cells (one range when the whole
-    matrix fits — the bit-identity fast path; single-row tiles when
-    n_cols alone exceeds the budget)."""
-    step = max(1, _KERNEL_TILE_CELLS // max(1, n_cols))
-    for r0 in range(0, n_rows, step):
-        yield r0, min(n_rows, r0 + step)
+_PAIR_COLS = ("vec_id", "neighbor_id", "cosine")
 
 
 def _guard_pair_emit(n_pairs: int, what: str, advice: str):
@@ -1089,10 +1058,91 @@ def _guard_pair_emit(n_pairs: int, what: str, advice: str):
         )
 
 
+def _stack_rows(col, unit=False):
+    """float64 matrix of a pandas column of equal-length arrays, rows
+    scaled to unit L2 norm when ``unit``. An empty column gives a (0, 0)
+    matrix, which _score_tiles scores without a gemm."""
+    import numpy as np
+
+    if len(col) == 0:
+        return np.zeros((0, 0))
+    M = np.stack(col.to_numpy()).astype(np.float64)
+    if unit:
+        M /= np.linalg.norm(M, axis=1, keepdims=True)
+    return M
+
+
+def _score_tiles(Q, X, qn=None, xn=None):
+    """The one scorer behind every Arrow similarity kernel: yields
+    ``(c0, c1, S)`` with ``S = round(Q·X[c0:c1]ᵀ [/ outer(qn, xn[c0:c1])], 6)``
+    — cosines over unit rows, or over raw rows with their norms.
+
+    Tiling (optimization r13, VERDICT r12 §Next #1): no kernel may
+    materialize an unbounded dense score block. One B×B (or
+    batch×index) float64 matrix per group is fine at sf0.1 where B is a
+    few hundred, and a guaranteed worker OOM at 100 TB for a hot LSH
+    bucket, a fat IVF cell, or a capped-but-large broadcast index (4M
+    rows × 10k-row batch = 320 GB of scores). Tiles therefore span
+    index columns in steps of _KERNEL_TILE_CELLS // len(Q) (128 MiB of
+    float64; one column per tile when the query side alone exceeds the
+    budget). The all-pairs kernels' output is inherently O(B²) rows
+    held in the worker until Arrow ships them, so they also cap what
+    one group may RETURN (_guard_pair_emit): past _KERNEL_PAIR_EMIT_CAP
+    a group fails loudly with routing advice instead of silently
+    OOM-killing the executor (the _guarded_index_arrays pattern).
+
+    Bit-identity: when the whole matrix fits one tile — every group of
+    every fixture SF does — the slices are full-array views, so the
+    single gemm call and therefore every rounded double equals the
+    untiled r12 kernels' (goldens pin this). Multi-tile groups are NOT
+    guaranteed that: BLAS may block a column slice differently from the
+    full product, so a slice score can differ in the last ulp, and a
+    score within half an ulp of a 0.5e-6 rounding point could flip an
+    l2_semdedup threshold decision or a top-k rank versus the oracle
+    (ADVICE r13). The ANN kernels' id-pair min-agg dedup absorbs such
+    copies; the threshold and rank exposure remains and only
+    single-tile groups are bit-identical.
+
+    An empty side yields one empty tile, so every consumer returns its
+    typed empty result without a gemm.
+    """
+    import numpy as np
+
+    n = X.shape[0]
+    if not len(Q) or not n:
+        yield 0, n, np.zeros((len(Q), n))
+        return
+    step = max(1, _KERNEL_TILE_CELLS // len(Q))
+    for c0 in range(0, n, step):
+        c1 = min(n, c0 + step)
+        S = Q @ X[c0:c1].T
+        if qn is not None:
+            S /= np.outer(qn, xn[c0:c1])
+        yield c0, c1, np.round(S, 6)
+
+
+def _pair_tiles(q_ids, x_ids, Q, X, keep, names=_PAIR_COLS, qn=None, xn=None):
+    """Pair emitter over _score_tiles: one frame per tile holding every
+    (q id, x id, score) whose ``keep(S, q_col, x_row)`` mask is set
+    (q_col / x_row are the tile's ids broadcast as column / row), so
+    neither the score block nor the emission ever materializes whole."""
+    import numpy as np
+    import pandas as pd
+
+    for c0, c1, S in _score_tiles(Q, X, qn, xn):
+        qi, xi = np.nonzero(keep(S, q_ids[:, None], x_ids[None, c0:c1]))
+        yield pd.DataFrame(
+            {names[0]: q_ids[qi], names[1]: x_ids[c0 + xi], names[2]: S[qi, xi]}
+        )
+
+
+def _not_self(S, q, x):
+    return q != x
+
+
 def _bucket_pair_frame(ids, E, N):
     """All ordered non-self pairs of one LSH bucket with rounded cosine
-    = (E·Eᵀ)/outer(N,N), row-tiled (l3_ann_lsh kernel core)."""
-    import numpy as np
+    = (E·Eᵀ)/outer(N,N) (l3_ann_lsh kernel core)."""
     import pandas as pd
 
     B = len(ids)
@@ -1103,23 +1153,13 @@ def _bucket_pair_frame(ids, E, N):
         "buckets) or more tables; an all-pairs scan of it cannot fit "
         "one worker.",
     )
-    chunks = []
-    for r0, r1 in _tile_steps(B, B):
-        S = np.round((E[r0:r1] @ E.T) / np.outer(N[r0:r1], N), 6)
-        qi, ii = np.nonzero(ids[r0:r1, None] != ids[None, :])
-        chunks.append(
-            pd.DataFrame(
-                {"vec_id": ids[r0 + qi], "neighbor_id": ids[ii], "cosine": S[qi, ii]}
-            )
-        )
-    return pd.concat(chunks, ignore_index=True)
+    tiles = _pair_tiles(ids, ids, E, E, _not_self, qn=N, xn=N)
+    return pd.concat(list(tiles), ignore_index=True)
 
 
 def _cell_pair_frame(q_ids, i_ids, Qu, Iu):
     """All (probe, assignment) non-self pairs of one IVF cell with
-    rounded cosine = Qu·Iuᵀ over unit vectors, row-tiled
-    (l3_ann_ivf kernel core)."""
-    import numpy as np
+    rounded cosine = Qu·Iuᵀ over unit vectors (l3_ann_ivf kernel core)."""
     import pandas as pd
 
     _guard_pair_emit(
@@ -1129,117 +1169,94 @@ def _cell_pair_frame(q_ids, i_ids, Qu, Iu):
         "quantizer) or lower nprobe/nassign; its probes×assignments "
         "grid cannot fit one worker.",
     )
-    chunks = []
-    for r0, r1 in _tile_steps(len(q_ids), len(i_ids)):
-        S = np.round(Qu[r0:r1] @ Iu.T, 6)
-        qi, ii = np.nonzero(q_ids[r0:r1, None] != i_ids[None, :])
-        chunks.append(
-            pd.DataFrame(
-                {
-                    "vec_id": q_ids[r0 + qi],
-                    "neighbor_id": i_ids[ii],
-                    "cosine": S[qi, ii],
-                }
-            )
-        )
-    return pd.concat(chunks, ignore_index=True)
+    tiles = _pair_tiles(q_ids, i_ids, Qu, Iu, _not_self)
+    return pd.concat(list(tiles), ignore_index=True)
 
 
 def _semdedup_dropped_frame(ids, E, N, threshold):
     """Ids dropped within one SemDeDup cell: vec y is dropped iff some
-    x with x.vec_id < y.vec_id has rounded cosine ≥ threshold —
-    computed as a row-tiled (E·Eᵀ)/outer(N,N) scan marking hit columns
-    (l2_semdedup kernel core). Output already distinct per group, and
-    cells partition the vectors, so no cross-group dedup is needed."""
+    x with x.vec_id < y.vec_id has rounded cosine ≥ threshold — the
+    drop-mask consumer of _score_tiles, marking hit columns tile by
+    tile (l2_semdedup kernel core). Output already distinct per group,
+    and cells partition the vectors, so no cross-group dedup is
+    needed."""
     import numpy as np
     import pandas as pd
 
-    B = len(ids)
-    dropped = np.zeros(B, dtype=bool)
-    for r0, r1 in _tile_steps(B, B):
-        S = np.round((E[r0:r1] @ E.T) / np.outer(N[r0:r1], N), 6)
-        hit = (S >= threshold) & (ids[r0:r1, None] < ids[None, :])
-        dropped |= hit.any(axis=0)
+    dropped = np.zeros(len(ids), dtype=bool)
+    for c0, c1, S in _score_tiles(E, E, N, N):
+        hit = (S >= threshold) & (ids[:, None] < ids[None, c0:c1])
+        dropped[c0:c1] = hit.any(axis=0)
     return pd.DataFrame({"vec_id": ids[dropped]})
 
 
 def _neardup_tiles(q_ids, all_ids, Q, idx, threshold):
     """Upper-triangle (q < i) pairs with rounded cosine ≥ threshold,
-    generated one index-column tile at a time (l2_embedding_neardup
-    kernel core) — emission streams per tile through mapInPandas, so
-    neither the score block NOR the output ever materializes whole."""
-    import numpy as np
-    import pandas as pd
-
-    for c0, c1 in _tile_steps(idx.shape[0], max(1, len(q_ids))):
-        S = np.round(Q @ idx[c0:c1].T, 6)
-        qi, ii = np.nonzero(
-            (S >= threshold) & (q_ids[:, None] < all_ids[None, c0:c1])
-        )
-        yield pd.DataFrame(
-            {"vec_a": q_ids[qi], "vec_b": all_ids[c0 + ii], "cosine": S[qi, ii]}
-        )
+    one frame per index-column tile (l2_embedding_neardup kernel core,
+    streamed through mapInPandas)."""
+    return _pair_tiles(
+        q_ids,
+        all_ids,
+        Q,
+        idx,
+        lambda S, q, x: (S >= threshold) & (q < x),
+        ("vec_a", "vec_b", "cosine"),
+    )
 
 
 def _tiled_topk(q_ids, all_ids, Q, X, k):
     """Top-k by (rounded cosine desc, id asc) of Q·Xᵀ over unit rows,
-    excluding self-pairs, never materializing more than one score tile.
+    excluding self-pairs — the streaming top-k consumer of _score_tiles.
 
-    Single-tile inputs (every fixture group/batch) take the exact
-    untiled r12 path — one gemm over full-array views + _vectorized_topk
-    — so results are bit-identical to the previous kernels. Multi-tile
-    inputs fold a running 2k-wide merge: the global top-k is the top-k
-    of per-tile top-ks (tiles partition the candidate set; order keys
-    and self-masking are per-tile identical), padded with −inf scores /
-    sentinel ids that can never outrank a real candidate.
+    A single tile (every fixture group/batch) takes the untiled r12
+    path, _vectorized_topk over the one full-array score block. Multi-
+    tile inputs fold a running merge: the global top-k is the top-k of
+    per-tile top-ks (tiles partition the candidate set; order keys and
+    self-masking are per-tile identical); masked self slots carry −inf
+    and a sentinel id, so they never outrank a real candidate and are
+    dropped at the end.
 
     Returns (query_ids, neighbor_ids, scores) flat arrays.
     """
     import numpy as np
 
-    n_idx = X.shape[0]
-    step = max(1, _KERNEL_TILE_CELLS // max(1, len(q_ids)))
-    if step >= n_idx:
-        S = np.round(Q @ X.T, 6)
-        return _vectorized_topk(q_ids, all_ids, S, k)
-
-    sent_id = np.iinfo(np.int64).max  # ties at −inf lose to any real id
-
-    def local_topk_padded(c0, c1):
-        S = np.round(Q @ X[c0:c1].T, 6)
-        ids_t = all_ids[c0:c1]
-        S = S.copy()
-        S[q_ids[:, None] == ids_t[None, :]] = -np.inf
-        kk = min(k, S.shape[1])
-        order = np.lexsort((np.broadcast_to(ids_t, S.shape), -S), axis=1)[:, :kk]
-        sc = np.take_along_axis(S, order, axis=1)
-        idc = ids_t[order]
-        if kk < k:  # pad narrow tiles to k columns
-            pad = k - kk
-            sc = np.hstack([sc, np.full((sc.shape[0], pad), -np.inf)])
-            idc = np.hstack(
-                [idc, np.full((idc.shape[0], pad), sent_id, dtype=np.int64)]
-            )
-        idc = np.where(np.isneginf(sc), sent_id, idc)  # masked self slots
-        return sc, idc
-
+    sent_id = np.iinfo(np.int64).max
     best_s = best_i = None
-    for c0 in range(0, n_idx, step):
-        c1 = min(n_idx, c0 + step)
-        sc, idc = local_topk_padded(c0, c1)
-        if best_s is None:
-            best_s, best_i = sc, idc
-            continue
-        cat_s = np.hstack([best_s, sc])
-        cat_i = np.hstack([best_i, idc])
-        order = np.lexsort((cat_i, -cat_s), axis=1)[:, :k]
-        best_s = np.take_along_axis(cat_s, order, axis=1)
-        best_i = np.take_along_axis(cat_i, order, axis=1)
+    for c0, c1, S in _score_tiles(Q, X):
+        if c1 - c0 == X.shape[0]:
+            return _vectorized_topk(q_ids, all_ids, S, k)
+        ids_t = all_ids[c0:c1]
+        S[q_ids[:, None] == ids_t[None, :]] = -np.inf
+        order = np.lexsort((np.broadcast_to(ids_t, S.shape), -S), axis=1)[:, :k]
+        sc = np.take_along_axis(S, order, axis=1)
+        idc = np.where(np.isneginf(sc), sent_id, ids_t[order])
+        if best_s is not None:
+            sc, idc = np.hstack([best_s, sc]), np.hstack([best_i, idc])
+            order = np.lexsort((idc, -sc), axis=1)[:, :k]
+            sc = np.take_along_axis(sc, order, axis=1)
+            idc = np.take_along_axis(idc, order, axis=1)
+        best_s, best_i = sc, idc
     rows = np.repeat(np.arange(best_s.shape[0]), best_s.shape[1])
-    flat_s = best_s.ravel()
-    flat_i = best_i.ravel()
-    keep = ~np.isneginf(flat_s)
-    return q_ids[rows[keep]], flat_i[keep], flat_s[keep]
+    keep = ~np.isneginf(best_s.ravel())
+    return q_ids[rows[keep]], best_i.ravel()[keep], best_s.ravel()[keep]
+
+
+def _topk_frame(q_ids, all_ids, Q, X, k):
+    """_tiled_topk as a (vec_id, neighbor_id, cosine) frame."""
+    import pandas as pd
+
+    return pd.DataFrame(dict(zip(_PAIR_COLS, _tiled_topk(q_ids, all_ids, Q, X, k))))
+
+
+def _top_k_per_vec(pairs: DataFrame, k: int) -> DataFrame:
+    """The k best neighbors per vec_id by (cosine desc, neighbor_id) —
+    a row_number window partitioned by the query id, never global."""
+    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), "neighbor_id")
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("vec_id", "neighbor_id", "cosine")
+    )
 
 
 @register("q10_cosine_topk", oracle=_Q10_ORACLE, tags=("L3", "U2", "W2"))
@@ -1261,25 +1278,16 @@ def q10_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scores round to 6 dp — numpy's blocked summation, Spark's fold,
     and DuckDB's list_cosine_similarity agree well past 1e-9.
     """
-    import numpy as np
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     ids_idx = _guarded_index_arrays(e)
     bc = spark.sparkContext.broadcast(ids_idx)
     k = 5
 
     def topk(batches):
-        import pandas as pd
-
         all_ids, idx = bc.value
         for pdf in batches:
-            q_ids = pdf["vec_id"].to_numpy()
-            Q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-            out_q, out_n, out_c = _tiled_topk(q_ids, all_ids, Q, idx, k)
-            yield pd.DataFrame(
-                {"vec_id": out_q, "neighbor_id": out_n, "cosine": out_c}
-            )
+            Q = _stack_rows(pdf["embedding"], unit=True)
+            yield _topk_frame(pdf["vec_id"].to_numpy(), all_ids, Q, idx, k)
 
     return e.mapInPandas(topk, "vec_id bigint, neighbor_id bigint, cosine double")
 
@@ -1342,12 +1350,7 @@ def l3_cosine_topk_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("pr")
     ).select("pr.vec_id", "pr.neighbor_id", "pr.cosine")
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("vec_id", "neighbor_id", "cosine")
-    )
+    return _top_k_per_vec(pairs, 5)
 
 
 @register("l3_knn_block_matmul", oracle=_Q10_ORACLE, tags=("L3", "U3", "W2"))
@@ -1388,33 +1391,20 @@ def l3_knn_block_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = q_rep.unionByName(i_rep)
 
     def cell_topk(pdf):
-        import numpy as np
-        import pandas as pd
-
         q = pdf[pdf["side"] == "q"]
         i = pdf[pdf["side"] == "i"]
-        if q.empty or i.empty:
-            return pd.DataFrame(
-                {"vec_id": [], "neighbor_id": [], "cosine": []}
-            ).astype({"vec_id": "int64", "neighbor_id": "int64", "cosine": "float64"})
-        q_ids = q["vec_id"].to_numpy()
-        i_ids = i["vec_id"].to_numpy()
-        Q = np.stack(q["embedding"].to_numpy()).astype(np.float64)
-        X = np.stack(i["embedding"].to_numpy()).astype(np.float64)
-        Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-        X /= np.linalg.norm(X, axis=1, keepdims=True)
-        out_q, out_n, out_c = _tiled_topk(q_ids, i_ids, Q, X, k)
-        return pd.DataFrame({"vec_id": out_q, "neighbor_id": out_n, "cosine": out_c})
+        return _topk_frame(
+            q["vec_id"].to_numpy(),
+            i["vec_id"].to_numpy(),
+            _stack_rows(q["embedding"], unit=True),
+            _stack_rows(i["embedding"], unit=True),
+            k,
+        )
 
     partials = tagged.groupBy("qb", "ib").applyInPandas(
         cell_topk, "vec_id bigint, neighbor_id bigint, cosine double"
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        partials.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("vec_id", "neighbor_id", "cosine")
-    )
+    return _top_k_per_vec(partials, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1496,9 +1486,8 @@ def l3_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
 
         ids = pdf["vec_id"].to_numpy()
-        E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         N = pdf["nrm"].to_numpy().astype(np.float64)
-        return _bucket_pair_frame(ids, E, N)
+        return _bucket_pair_frame(ids, _stack_rows(pdf["embedding"]), N)
 
     # Collapse multi-table collisions of the same pair on the ID PAIR,
     # not on (ids, cosine): per-group BLAS matmuls of different shapes
@@ -1515,12 +1504,7 @@ def l3_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "neighbor_id")
         .agg(F.min("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("vec_id", "neighbor_id", "cosine")
-    )
+    return _top_k_per_vec(pairs, 5)
 
 
 # ---------------------------------------------------------------------------
@@ -1620,7 +1604,7 @@ def l3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             n = len(pdf)
             if n == 0:
                 continue
-            U = np.stack(pdf["u"].to_numpy()).astype(np.float64)
+            U = _stack_rows(pdf["u"])
             S = np.zeros((n, C.shape[0]), dtype=np.float64)
             for d in range(C.shape[1]):  # sequential fold — see above
                 S += U[:, d : d + 1] * C[None, :, d]
@@ -1669,20 +1653,14 @@ def l3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def cell_pairs(pdf):
-        import numpy as np
-        import pandas as pd
-
         q = pdf[pdf["side"] == "q"]
         i = pdf[pdf["side"] == "i"]
-        if q.empty or i.empty:
-            return pd.DataFrame(
-                {"vec_id": [], "neighbor_id": [], "cosine": []}
-            ).astype({"vec_id": "int64", "neighbor_id": "int64", "cosine": "float64"})
-        q_ids = q["vid"].to_numpy()
-        i_ids = i["vid"].to_numpy()
-        Qu = np.stack(q["u"].to_numpy())
-        Iu = np.stack(i["u"].to_numpy())
-        return _cell_pair_frame(q_ids, i_ids, Qu, Iu)
+        return _cell_pair_frame(
+            q["vid"].to_numpy(),
+            i["vid"].to_numpy(),
+            _stack_rows(q["u"]),
+            _stack_rows(i["u"]),
+        )
 
     # id-pair dedup instead of DISTINCT over (ids, cosine) — see
     # l3_ann_lsh (ADVICE r12 #1): collapses a multi-assignment copy even
@@ -1695,12 +1673,7 @@ def l3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "neighbor_id")
         .agg(F.min("cosine").alias("cosine"))
     )
-    w_top = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        pairs.withColumn("rk", F.row_number().over(w_top))
-        .filter(F.col("rk") <= k)
-        .select("vec_id", "neighbor_id", "cosine")
-    )
+    return _top_k_per_vec(pairs, k)
 
 
 # ---------------------------------------------------------------------------
@@ -6511,9 +6484,10 @@ def l2_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
 
         ids = pdf["vec_id"].to_numpy()
-        E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         N = pdf["nrm"].to_numpy().astype(np.float64)
-        return _semdedup_dropped_frame(ids, E, N, _SEMDEDUP_COS)
+        return _semdedup_dropped_frame(
+            ids, _stack_rows(pdf["embedding"]), N, _SEMDEDUP_COS
+        )
 
     dropped = cells.groupBy("cell").applyInPandas(drop_kernel, "vec_id bigint")
     return (

@@ -378,12 +378,15 @@ def test_q10_has_no_unconditional_collect():
 def test_block_matmul_knn_is_distributed():
     """The distributed exact-kNN twin must stay driver-free: no collect
     in its source, and its final top-k window is partitioned by vec_id
-    (never a global sort)."""
+    (never a global sort) — the shared llm._top_k_per_vec window."""
     import inspect
+
+    from data_wrangling_openstreetmap_spark.operators import llm
 
     src = inspect.getsource(REGISTRY["l3_knn_block_matmul"].fn)
     assert ".collect()" not in src and ".toArrow()" not in src
-    assert "partitionBy" in src
+    assert "return _top_k_per_vec(partials, k)" in src
+    assert 'Window.partitionBy("vec_id")' in inspect.getsource(llm._top_k_per_vec)
 
 
 # Every driver-side materialization in package source, as (relative
@@ -568,7 +571,7 @@ def test_aggregate_fold_allowlist():
 #   stateful         — streaming state kernel (integer accumulation),
 #                      graded via st7/st16; transformWithState env-gated
 UDF_CROSSING_SITES = {
-    ("operators/llm.py", 'partials = tagged.groupBy("qb", "ib").applyInPandas(', 1): "numeric-exact",  # l3 block matmul: float32 matmul + local top-k, graded + benched
+    ("operators/llm.py", 'partials = tagged.groupBy("qb", "ib").applyInPandas(', 1): "numeric-exact",  # l3 block matmul: float64 matmul + local top-k, graded + benched
     ("operators/llm.py", '.applyInPandas(', 2): "numeric-exact",  # l3_ann_lsh bucket / l3_ann_ivf cell matmul scoring (opt r12, tiled r13): 6-dp rounded doubles, recall contract driver-graded
     ("operators/llm.py", 'dropped = cells.groupBy("cell").applyInPandas(drop_kernel, "vec_id bigint")', 1): "numeric-exact",  # l2_semdedup within-cell matmul (opt r13): 6-dp rounded threshold vs DuckDB oracle at 3 SFs, golden unchanged
     ("operators/llm.py", 'ranked = unit.mapInPandas(', 1): "numeric-exact",  # l3_ann_ivf assignment kernel (opt r13): bit-identical sequential-fold dots (test_round13_opt), recall contract driver-graded

@@ -20,7 +20,12 @@ pin the NEW internals' edge behavior the fixture cannot exercise:
   Jaccard pairs (VERDICT r12 §Next #4);
 - the NTZ lint: no `unix_micros` survives anywhere in package source
   (VERDICT r12 §Next #3 — the st14 session-timezone class; the one
-  sanctioned spelling is _helpers.ntz_epoch_us).
+  sanctioned spelling is _helpers.ntz_epoch_us);
+- the rounding lint: the one `np.round` in package source is the
+  shared scorer's (llm._score_tiles), so every Arrow kernel rounds
+  through one definition;
+- empty groups: a zero-row query or index side through the pair
+  emitter and the top-k consumer returns a typed zero-row frame.
 """
 
 from __future__ import annotations
@@ -42,8 +47,10 @@ from data_wrangling_openstreetmap_spark.operators.llm import (
     _neardup_tiles,
     _semdedup_dropped_frame,
     _shingle_hash_col,
+    _stack_rows,
     _tiled_topk,
     _token_folds,
+    _topk_frame,
     _vectorized_topk,
 )
 
@@ -161,6 +168,30 @@ def test_pair_emit_guard_raises_loudly(monkeypatch):
         _bucket_pair_frame(ids, E, N)
     with pytest.raises(ValueError, match="l3_ann_ivf"):
         _cell_pair_frame(ids, ids + 100, E, E)
+
+
+@pytest.mark.parametrize("empty_side", ["query", "index"])
+@pytest.mark.parametrize(
+    "consumer",
+    [
+        lambda q_ids, i_ids, Q, X: _cell_pair_frame(q_ids, i_ids, Q, X),
+        lambda q_ids, i_ids, Q, X: _topk_frame(q_ids, i_ids, Q, X, 5),
+    ],
+    ids=["pair_emitter", "topk"],
+)
+def test_empty_side_returns_typed_empty_frame(empty_side, consumer):
+    # a grouped kernel sees one side empty when a (block, cell) group
+    # holds only query rows or only index rows
+    ids = np.arange(1, 6, dtype=np.int64)
+    E = _int_embeddings(5, 4, seed=9)
+    none_ids = np.array([], dtype=np.int64)
+    none = _stack_rows(pd.Series([], dtype=object))
+    if empty_side == "query":
+        got = consumer(none_ids, ids, none, E)
+    else:
+        got = consumer(ids, none_ids, E, none)
+    assert len(got) == 0
+    assert list(got.dtypes.astype(str)) == ["int64", "int64", "float64"]
 
 
 def test_composed_shingle_fold_equals_string_fold(spark):
@@ -363,3 +394,41 @@ def test_no_unix_micros_in_package_source():
                     if "unix_micros" in line:
                         offenders.append((rel, lineno, line.strip()))
     assert not offenders, f"unix_micros on (potentially) NTZ inputs: {offenders}"
+
+
+def test_single_np_round_in_package_source():
+    """The rounding lint: every Arrow kernel rounds its scores through
+    llm._score_tiles, so exactly one `np.round` call exists in package
+    source and it sits inside that function. A second call site is a
+    kernel whose rounding can drift from the others."""
+    import ast
+
+    import data_wrangling_openstreetmap_spark as pkg
+
+    root = os.path.dirname(os.path.abspath(pkg.__file__))
+    sites = []
+
+    def visit(node, rel, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("round", "around", "round_")
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id in ("np", "numpy")
+        ):
+            sites.append((rel, node.lineno, func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, func)
+
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            if fname.endswith(".py"):
+                path = os.path.join(dirpath, fname)
+                rel = os.path.relpath(path, root).replace(os.sep, "/")
+                with open(path, encoding="utf-8") as fh:
+                    visit(ast.parse(fh.read()), rel, None)
+    assert [(rel, func) for rel, _, func in sites] == [
+        ("operators/llm.py", "_score_tiles")
+    ], f"np.round call sites: {sites}"

@@ -394,8 +394,10 @@ def test_registry_order_determinism(spark, monkeypatch):
 
     monkeypatch.setenv("DWOS_FULL_PLAN", "1")
     _ensure_loaded()
+    # a local memo, git-ignored: its keys are JVM plan hashes that change
+    # between runs, so a tracked copy would be rewritten by every run
     cache = _DiskProbeCache(
-        os.path.join(os.path.dirname(__file__), "order_sweep_cache.json"),
+        os.path.join(os.path.dirname(__file__), ".order_sweep_cache.json"),
         _fixture_fingerprint(SWEEP_SF),
     )
     wstats = SweepStats()
